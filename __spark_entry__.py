@@ -327,12 +327,11 @@ FROM lineitem
 
 
 def q_pip_skew(spark, sf_dir):
-    # pins the SALTED SORT-MERGE join path in the driver gate (every
+    # pins the pid-keyed SHUFFLE join path in the oracle gate (every
     # other spatial entry auto-picks the broadcast index): hot cell
-    # pre-split 8 ways + AQE as backstop, exact ray-cast refine.
-    # dedup_coords=True was A/B-measured HERE and rejected: at this
-    # ~25%-duplication factor the distinct + coordinate join-back cost
-    # more than the candidate-pair reduction saved (OPTIMIZATION_r07.md)
+    # pre-split 8 ways by a salt over the point row, AQE skew splitting
+    # as the backstop, exact ray-cast refine.  Full-row-duplicate hot
+    # rows would still share one salt; ROADMAP D2 owns that case.
     pts = _pts_skewed(spark, sf_dir)
     dia = _diamond_wkb(_diamonds(spark, sf_dir))
     out = point_in_polygon_join(

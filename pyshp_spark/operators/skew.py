@@ -1,14 +1,14 @@
-"""Skew diagnosis + salting planner.
+"""Skew diagnosis: the per-cell occupancy histogram.
 
 Dense multipart polygons (blockgroups-style) concentrate many points in
-few cells; on the sort-merge join path those cells become straggler
-reducers.  The planner measures the cell histogram with a cheap
-pre-pass aggregation (map-side partial combine — one small shuffle) and
-picks a salt factor from the hot-cell/median ratio; the PIP join then
-splits hot cells into ``salt_k`` replicas (see
-operators/spatial.point_in_polygon_join(salt_k=...)).  AQE skew-join
-splitting (spark.sql.adaptive.skewJoin.enabled) remains the runtime
-backstop for skew the pre-pass missed.
+few cells; on the sort-merge PIP join path those cells become straggler
+reducers.  ``cell_histogram`` / ``skew_stats`` measure that load with a
+cheap pre-pass aggregation (map-side partial combine — one small
+shuffle).  The join itself only takes a caller-chosen uniform
+``salt_k`` on its shuffle path (operators/spatial.point_in_polygon_join);
+AQE skew-join splitting (spark.sql.adaptive.skewJoin.enabled) is the
+runtime backstop, and full-row-duplicate hot rows still share one salt
+— ROADMAP D2 (per-cell replication sized from this histogram) owns that.
 """
 
 from __future__ import annotations
@@ -46,20 +46,3 @@ def skew_stats(points: DataFrame, x: str = "x", y: str = "y",
         "median_rows": row.median_rows,
         "n_cells": row.n_cells,
     }
-
-
-def plan_salt_k(points: DataFrame, x: str = "x", y: str = "y",
-                grid: Grid = GRID, target_ratio: float = 4.0,
-                max_k: int = 16) -> int | None:
-    """Salt factor for the sort-merge PIP join: None when the hottest
-    cell is within ``target_ratio`` of the mean (no salting needed),
-    else the power-of-two k that brings the hot cell under the target,
-    capped at ``max_k`` (each polygon cover row is replicated k times —
-    build-side cost grows linearly)."""
-    s = skew_stats(points, x, y, grid)
-    if s["mean_rows"] <= 0 or s["max_rows"] <= target_ratio * s["mean_rows"]:
-        return None
-    k = 2
-    while k < max_k and s["max_rows"] / k > target_ratio * s["mean_rows"]:
-        k *= 2
-    return k

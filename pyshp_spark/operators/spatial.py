@@ -5,16 +5,19 @@ scalar ray-cast (reference src/shapefile.py:856-914); joins over it
 would be O(N*M) single-threaded loops.  Here the same kernels become a
 three-stage distributed plan:
 
-  1. FILTER  — equi-join on int64 grid cells (polygon side carries an
-     exploded bbox cell cover, point side one cell).  Catalyst picks
-     broadcast-hash when the polygon side is small (we hint it), else
-     sort-merge with AQE skew splitting; optional salting spreads hot
-     cells explicitly.
-  2. PREFILTER — bbox overlap as a pure Column expression
-     (codegen'd; reference semantics sf.py:856-861, inclusive <=).
-  3. REFINE — vectorized even-odd ray-cast over Arrow batches
-     (``mapInPandas``), parsing each distinct polygon WKB once per
-     batch.  Bit-for-bit the reference's crossing test.
+  1. FILTER  — int64 grid cells (polygon side carries a bbox cell
+     cover, point side one cell).
+  2. PREFILTER — bbox overlap, inclusive <= (reference semantics
+     sf.py:856-861).
+  3. REFINE — vectorized even-odd ray-cast over Arrow batches,
+     bit-for-bit the reference's crossing test.
+
+The point-in-polygon family (inner / semi / anti join) has exactly two
+physical paths, chosen once by :func:`_broadcast_index` from the
+measured build-side size: a :class:`BroadcastPolygonIndex` probed
+inside one Arrow pass over the points (no fact-side shuffle), or the
+pid-keyed shuffle join (cell equi-join, optionally salted, with AQE
+skew splitting; the polygon WKB re-attaches by pid before the refine).
 
 Because a point maps to exactly one cell, a (point, polygon) pair
 appears at most once after the cell join — no dedup pass is needed.
@@ -29,6 +32,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StructType,
+    VariantType,
+)
 from pyspark.sql.window import Window
 
 from pyshp_spark.functions.bbox import point_in_bbox_expr
@@ -76,16 +86,16 @@ def _explode_bbox_cover(
     )
 
 
-def _polygons_with_cells(
-    polygons: DataFrame, grid: Grid, salt_k: int | None
-) -> DataFrame:
-    """Explode each polygon row into one row per cover cell (and salt)."""
-    out = _explode_bbox_cover(polygons, grid)
-    if salt_k:
-        out = out.withColumn(
-            _P + "salt", F.explode(F.sequence(F.lit(0), F.lit(salt_k - 1)))
-        )
-    return out
+def _hashable(dt: DataType) -> bool:
+    """False for types ``F.hash`` rejects at analysis time (maps and
+    variants, also when nested in an array or struct)."""
+    if isinstance(dt, (MapType, VariantType)):
+        return False
+    if isinstance(dt, ArrayType):
+        return _hashable(dt.elementType)
+    if isinstance(dt, StructType):
+        return all(_hashable(f.dataType) for f in dt.fields)
+    return True
 
 
 def _points_with_cell(
@@ -93,24 +103,28 @@ def _points_with_cell(
 ) -> DataFrame:
     out = points.withColumn(_P + "cell", grid.cell_expr(F.col(x), F.col(y)))
     if salt_k:
-        # salt over the WHOLE point row, not just (x, y): the archetypal
-        # hot spot is many rows at ONE exact coordinate, and a
-        # coordinate-derived salt maps them all to a single (cell, salt)
-        # partition — the salted join then still serializes the hot cell
-        # in one task (guide §2.5).  Hashing every point column spreads
-        # identical-coordinate rows across all k salts; the salt only
-        # routes rows, so results are unchanged, and it stays
-        # DETERMINISTIC under task retry (no rand()).
+        # salt over the point row's hashable columns, not just (x, y):
+        # the archetypal hot spot is many rows at ONE exact coordinate,
+        # and a coordinate-derived salt maps them all to a single
+        # (cell, salt) partition.  Rows that differ in any
+        # hashed column spread across the k salts, but full-row
+        # duplicate point rows still share one salt and serialize in
+        # one task; AQE skew-join splitting is the backstop for that
+        # shape, and ROADMAP D2 (per-cell replication with a row
+        # discriminator) owns the fix.  The salt only routes rows, so
+        # results are unchanged, and it stays DETERMINISTIC under task
+        # retry (no rand()).
+        hashed = [F.col(f.name) for f in points.schema.fields
+                  if _hashable(f.dataType)]
         out = out.withColumn(
             _P + "salt",
-            F.pmod(F.hash(*[F.col(c) for c in points.columns]),
-                   F.lit(salt_k)).cast("int"),
+            F.pmod(F.hash(*hashed), F.lit(salt_k)).cast("int"),
         )
     return out
 
 
 def _refine_pip(
-    df: DataFrame, x: str, y: str, keep_wkb: bool = False,
+    df: DataFrame, x: str, y: str,
     drop_cols: set[str] | frozenset[str] = frozenset(),
 ) -> DataFrame:
     """Arrow-batched even-odd ray-cast refine on candidate pairs.
@@ -124,10 +138,8 @@ def _refine_pip(
     """
     out_fields = [
         f for f in df.schema.fields
-        if (keep_wkb or f.name != "wkb") and f.name not in drop_cols
+        if f.name != "wkb" and f.name not in drop_cols
     ]
-    from pyspark.sql.types import StructType  # noqa: PLC0415
-
     out_schema = StructType(out_fields)
     out_cols = [f.name for f in out_fields]
     in_names = [f.name for f in df.schema.fields]
@@ -208,6 +220,41 @@ def _resolve_broadcast(
     return True
 
 
+def _broadcast_index(
+    polygons: DataFrame,
+    grid: Grid,
+    polygon_cols: list[str],
+    broadcast_polygons,
+    max_broadcast_rows: int,
+    max_broadcast_bytes: int,
+) -> BroadcastPolygonIndex | None:
+    """The PIP family's one path decision: the broadcast index for
+    ``polygons``, or None when the caller takes the pid-keyed shuffle
+    path.  ``salt_k`` plays no part here: a salt only routes rows
+    through an exchange, and the index path has none.
+
+    An already-cached index answers the question for free, so
+    steady-state repeated joins against the same dimension table skip
+    the size probe's two jobs (a LIMIT-bounded count plus a
+    sum(length(wkb)) scan that re-evaluates any geometry-producing UDF
+    over the whole build side).  The shortcut only applies under the
+    DEFAULT guard values: a per-call tightened guard must keep forcing
+    the probe and its fallback."""
+    if (
+        broadcast_polygons == "auto"
+        and (max_broadcast_rows, max_broadcast_bytes) == _DEFAULT_GUARD
+    ):
+        key = _index_cache_key(polygons, grid, polygon_cols)
+        idx = None if key is None else _find_cached_index(key, polygon_cols)
+        if idx is not None:
+            return idx
+    if _resolve_broadcast(
+        polygons, broadcast_polygons, max_broadcast_rows, max_broadcast_bytes
+    ):
+        return _cached_polygon_index(polygons, grid, polygon_cols)
+    return None
+
+
 def point_in_polygon_join(
     points: DataFrame,
     polygons: DataFrame,
@@ -221,7 +268,6 @@ def point_in_polygon_join(
     max_broadcast_rows: int = 4_000_000,
     max_broadcast_bytes: int = 1_500_000_000,
     point_out_cols: list[str] | None = None,
-    dedup_coords: bool = False,
 ) -> DataFrame:
     """Inner join: each point row paired with every polygon containing it.
 
@@ -236,33 +282,20 @@ def point_in_polygon_join(
     cross Arrow on the fact side) and the probe side never shuffles.
     ``broadcast_polygons="auto"`` (default) probes the build-side size
     and picks broadcast vs sort-merge automatically; pass True/False to
-    force, and optionally ``salt_k`` to pre-split hot cells on the
-    shuffle path.  ``point_out_cols`` (subset of the point columns)
-    restricts which point columns reach the OUTPUT — coords consumed
-    only by the refine never travel back through Arrow.
+    force.  ``salt_k`` pre-splits hot cells on the shuffle path only
+    (the broadcast path has no exchange to salt).  ``point_out_cols``
+    (subset of the point columns) restricts which point columns reach
+    the OUTPUT — coords consumed only by the refine never travel back
+    through Arrow.
 
     Sort-merge-path type contract: the deterministic polygon id hashes
     and window-partitions over (wkb, *polygon_cols), so on that path
     every ``polygon_cols`` column must be a type Spark can hash and
     partition by (MapType, for one, is not) — an AnalysisException
     surfaces at plan time otherwise.  Project such columns away and
-    re-attach them after the join, or use the broadcast path.
-
-    ``dedup_coords=True`` (shuffle/salted path only) collapses the
-    probe to DISTINCT (x, y) before the candidate join, refines only
-    distinct coordinates, and re-attaches the full point rows with a
-    JVM coordinate equi-join afterwards — the guide §2.5 hot-key
-    special case for probe sets where many rows share exact
-    coordinates (sensor pile-ups, default locations): a coordinate
-    carried by a million rows contributes its candidate pairs ONCE to
-    the join + Arrow refine instead of a million times, which both
-    kills the skewed candidate partition and shrinks the Python
-    boundary bytes.  Results are identical (the join-back restores
-    per-row multiplicity; Spark joins match NaN=NaN and drop NULL keys,
-    and neither NaN nor NULL coordinates can appear in the matched set
-    — exactly the rows the bbox filter already rejects).  Leave False
-    when probe coordinates are mostly unique: the distinct + join-back
-    then costs an extra shuffle for no pair reduction.
+    re-attach them after the join, or use the broadcast path.  Point
+    columns carry no such constraint: the salt hashes only the point
+    columns Spark can hash.
     """
     pcols = point_cols or [c for c in points.columns]
     gcols = polygon_cols or [
@@ -272,54 +305,14 @@ def point_in_polygon_join(
     bad = set(ocols) - set(pcols)
     if bad:
         raise ValueError(f"point_out_cols not in point_cols: {sorted(bad)}")
-    if not salt_k:
-        # an already-cached index answers the broadcast question for
-        # free — only cache misses pay the size-probe jobs
-        if (
-            broadcast_polygons == "auto"
-            and (max_broadcast_rows, max_broadcast_bytes) == _DEFAULT_GUARD
-            and _has_cached_index(polygons, grid, gcols)
-        ) or _resolve_broadcast(
-            polygons, broadcast_polygons, max_broadcast_rows, max_broadcast_bytes
-        ):
-            return _pip_join_broadcast(
-                points, polygons, x, y, grid, pcols, gcols, ocols
-            )
-        broadcast_polygons = False  # probe said too big: sort-merge path
-    else:
-        # salted path: the probe only decides the broadcast HINT on the
-        # exploded build side
-        broadcast_polygons = _resolve_broadcast(
-            polygons, broadcast_polygons, max_broadcast_rows, max_broadcast_bytes
+    idx = _broadcast_index(
+        polygons, grid, gcols, broadcast_polygons,
+        max_broadcast_rows, max_broadcast_bytes,
+    )
+    if idx is not None:
+        return idx.join_points(
+            points, x=x, y=y, point_cols=pcols, point_out_cols=ocols
         )
-    build_src = polygons.select(*POLYGON_META_COLS, *gcols)
-    joinback_src = None
-    if dedup_coords:
-        # §2.5 hot-key collapse: candidate join + refine see each
-        # distinct coordinate once; full rows re-attach afterwards
-        joinback_src = points.select(*pcols)
-        points = joinback_src.select(F.col(x), F.col(y)).distinct()
-        pcols = [x, y]
-        refine_drop: set[str] = set()  # coords are the join-back key
-    else:
-        refine_drop = set(pcols) - set(ocols)
-
-    def _attach(refined: DataFrame) -> DataFrame:
-        if joinback_src is None:
-            return refined
-        return joinback_src.join(refined, on=[x, y]).select(*ocols, *gcols)
-
-    probe = _points_with_cell(points.select(*pcols), x, y, grid, salt_k)
-    join_keys = [_P + "cell"] + ([_P + "salt"] if salt_k else [])
-    if broadcast_polygons:
-        build = F.broadcast(_polygons_with_cells(build_src, grid, salt_k))
-        cand = probe.join(build, on=join_keys, how="inner").where(
-            point_in_bbox_expr(
-                F.col(x), F.col(y),
-                F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"),
-            )
-        ).select(*pcols, *gcols, "wkb")
-        return _attach(_refine_pip(cand, x, y, drop_cols=refine_drop))
 
     # shuffle path: the exploded build side replicates each polygon row
     # x cover-cells x salt_k through the exchange — so ship only
@@ -336,9 +329,12 @@ def point_in_polygon_join(
     # sort is over identical rows, so any tie order yields the same
     # result.  persist() shares the one window shuffle between the two
     # uses while staying lineage-recoverable.
+    probe = _points_with_cell(points.select(*pcols), x, y, grid, salt_k)
+    join_keys = [_P + "cell"] + ([_P + "salt"] if salt_k else [])
     dup_w = Window.partitionBy("wkb", *gcols).orderBy(F.lit(1))
     keyed = (
-        build_src.withColumn(_P + "dup", F.row_number().over(dup_w))
+        polygons.select(*POLYGON_META_COLS, *gcols)
+        .withColumn(_P + "dup", F.row_number().over(dup_w))
         .withColumn(_P + "pid", F.xxhash64("wkb", *gcols, _P + "dup"))
         .withColumn(_P + "pid2", F.hash("wkb", *gcols, _P + "dup"))
         .drop(_P + "dup")
@@ -346,7 +342,11 @@ def point_in_polygon_join(
     )
     _register_op_caches("pip_shuffle", [keyed])
     pid_keys = [_P + "pid", _P + "pid2"]
-    build = _polygons_with_cells(keyed.drop("wkb"), grid, salt_k)
+    build = _explode_bbox_cover(keyed.drop("wkb"), grid)
+    if salt_k:
+        build = build.withColumn(
+            _P + "salt", F.explode(F.sequence(F.lit(0), F.lit(salt_k - 1)))
+        )
     cand = probe.join(build, on=join_keys, how="inner").where(
         point_in_bbox_expr(
             F.col(x), F.col(y),
@@ -356,7 +356,7 @@ def point_in_polygon_join(
     cand = cand.join(
         keyed.select(*pid_keys, "wkb"), on=pid_keys, how="inner"
     ).select(*pcols, *gcols, "wkb")
-    return _attach(_refine_pip(cand, x, y, drop_cols=refine_drop))
+    return _refine_pip(cand, x, y, drop_cols=set(pcols) - set(ocols))
 
 
 _INDEX_CACHE: dict = {}
@@ -416,25 +416,6 @@ def _find_cached_index(key, polygon_cols):
 
 
 _DEFAULT_GUARD = (4_000_000, 1_500_000_000)
-
-
-def _has_cached_index(polygons, grid, polygon_cols) -> bool:
-    """True when a usable broadcast index for this polygon plan is
-    already cached — the entry points consult this BEFORE running the
-    broadcast-size probe, so steady-state repeated joins against the
-    same dimension table skip the probe's two jobs (a LIMIT-bounded
-    count plus a sum(length(wkb)) scan that re-evaluates any geometry-
-    producing UDF over the whole build side) entirely.  Callers only
-    take this shortcut under the DEFAULT guard values: a per-call
-    tightened guard must keep forcing the probe (and its fallback)."""
-    key = _index_cache_key(polygons, grid, polygon_cols)
-    if key is None:
-        return False
-    if key in _INDEX_CACHE:
-        return True
-    if not (polygon_cols or []):
-        return any(k[:3] == key[:3] for k in _INDEX_CACHE)
-    return False
 
 
 def _cached_polygon_index(polygons: DataFrame, grid: Grid,
@@ -829,10 +810,31 @@ class BroadcastPolygonIndex:
         )
 
 
-def _pip_join_broadcast(points, polygons, x, y, grid, pcols, gcols, ocols=None):
-    return _cached_polygon_index(
-        polygons, grid, gcols
-    ).join_points(points, x=x, y=y, point_cols=pcols, point_out_cols=ocols)
+def _semi_anti_join(
+    points, polygons, mode, x, y, grid, broadcast_polygons, salt_k,
+    max_broadcast_rows, max_broadcast_bytes, point_out_cols, **kw,
+) -> DataFrame:
+    """Shared body of :func:`spatial_semi_join` (``mode="semi"``) and
+    :func:`spatial_anti_join` (``mode="anti"``)."""
+    idx = _broadcast_index(
+        polygons, grid, [], broadcast_polygons,
+        max_broadcast_rows, max_broadcast_bytes,
+    )
+    if idx is not None:
+        return idx.join_points(
+            points, x=x, y=y, mode=mode, point_out_cols=point_out_cols
+        )
+    pcols = points.columns
+    matched = point_in_polygon_join(
+        points, polygons, x=x, y=y, grid=grid, polygon_cols=[],
+        broadcast_polygons=False, salt_k=salt_k, **kw
+    )
+    matched_vals = matched.select(*pcols).dropDuplicates(pcols)
+    out = points.join(
+        matched_vals, on=_null_safe_cond(points, matched_vals, pcols),
+        how="left_" + mode,
+    )
+    return out if point_out_cols is None else out.select(*point_out_cols)
 
 
 def spatial_semi_join(
@@ -853,30 +855,10 @@ def spatial_semi_join(
     null-safe equality (a row carrying a NULL in a non-coordinate
     column must still match its own matched tuple), which also
     preserves left multiplicity."""
-    pcols = points.columns
-    if not salt_k and (
-        (
-            broadcast_polygons == "auto"
-            and (max_broadcast_rows, max_broadcast_bytes) == _DEFAULT_GUARD
-            and _has_cached_index(polygons, grid, [])
-        )
-        or _resolve_broadcast(
-            polygons, broadcast_polygons, max_broadcast_rows, max_broadcast_bytes
-        )
-    ):
-        return _cached_polygon_index(polygons, grid, []).join_points(
-            points, x=x, y=y, mode="semi", point_out_cols=point_out_cols
-        )
-    matched = point_in_polygon_join(
-        points, polygons, x=x, y=y, grid=grid, polygon_cols=[],
-        broadcast_polygons=False, salt_k=salt_k, **kw
+    return _semi_anti_join(
+        points, polygons, "semi", x, y, grid, broadcast_polygons, salt_k,
+        max_broadcast_rows, max_broadcast_bytes, point_out_cols, **kw,
     )
-    matched_vals = matched.select(*pcols).dropDuplicates(pcols)
-    out = points.join(
-        matched_vals, on=_null_safe_cond(points, matched_vals, pcols),
-        how="left_semi",
-    )
-    return out if point_out_cols is None else out.select(*point_out_cols)
 
 
 def _null_safe_cond(left: DataFrame, right: DataFrame, cols: list[str]) -> Column:
@@ -904,30 +886,10 @@ def spatial_anti_join(
     pipeline.  Sort-merge fallback: left_anti against the distinct
     matched point-values with null-safe equality (plain equality would
     wrongly KEEP a matched row whose non-coordinate column is NULL)."""
-    pcols = points.columns
-    if not salt_k and (
-        (
-            broadcast_polygons == "auto"
-            and (max_broadcast_rows, max_broadcast_bytes) == _DEFAULT_GUARD
-            and _has_cached_index(polygons, grid, [])
-        )
-        or _resolve_broadcast(
-            polygons, broadcast_polygons, max_broadcast_rows, max_broadcast_bytes
-        )
-    ):
-        return _cached_polygon_index(polygons, grid, []).join_points(
-            points, x=x, y=y, mode="anti", point_out_cols=point_out_cols
-        )
-    matched = point_in_polygon_join(
-        points, polygons, x=x, y=y, grid=grid, polygon_cols=[],
-        broadcast_polygons=False, salt_k=salt_k, **kw
+    return _semi_anti_join(
+        points, polygons, "anti", x, y, grid, broadcast_polygons, salt_k,
+        max_broadcast_rows, max_broadcast_bytes, point_out_cols, **kw,
     )
-    matched_vals = matched.select(*pcols).dropDuplicates(pcols)
-    out = points.join(
-        matched_vals, on=_null_safe_cond(points, matched_vals, pcols),
-        how="left_anti",
-    )
-    return out if point_out_cols is None else out.select(*point_out_cols)
 
 
 def tile_assignment(
@@ -975,30 +937,13 @@ def tile_assignment(
             c for c in polygons.columns
             if c not in POLYGON_META_COLS
         ]
-        build = _polygons_with_cells(
-            polygons.select("xmin", "ymin", "xmax", "ymax", *gcols), grid, None
+        return bbox_overlap_join(
+            boxed,
+            polygons.select("xmin", "ymin", "xmax", "ymax", *gcols),
+            grid=grid,
+            rect_cols=("__txmin", "__tymin", "__txmax", "__tymax"),
+            out_cols=tiles.columns + gcols,
         )
-        probe = _explode_bbox_cover(
-            boxed, grid, "__txmin", "__tymin", "__txmax", "__tymax"
-        )
-        cand = probe.join(F.broadcast(build), on=_P + "cell").where(
-            (F.col("__txmin") <= F.col("xmax"))
-            & (F.col("xmin") <= F.col("__txmax"))
-            & (F.col("__tymin") <= F.col("ymax"))
-            & (F.col("ymin") <= F.col("__tymax"))
-        )
-        # responsibility cell: the pair is emitted only from the cell
-        # holding the overlap rectangle's min corner (in BOTH covers by
-        # construction) — dedup is a codegen'd filter, zero shuffle
-        cand = cand.where(
-            F.col(_P + "cell")
-            == grid.cell_expr(
-                F.greatest(F.col("__txmin"), F.col("xmin")),
-                F.greatest(F.col("__tymin"), F.col("ymin")),
-            )
-        )
-        out_cols = tiles.columns + gcols
-        return cand.select(*out_cols)
     raise ValueError(f"unknown tile_assignment mode {mode!r}")
 
 
@@ -1310,13 +1255,6 @@ def knn_join(
     return out
 
 
-def _union_all(dfs: list[DataFrame]) -> DataFrame:
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    return out
-
-
 def tile_pyramid(
     tiles: DataFrame,
     tx: str = "tile_x",
@@ -1420,7 +1358,7 @@ def zonal_stats(
     reduction of a tile-georeferenced image corpus (e.g. mean decoded
     brightness or caption length per admin polygon).
 
-    Plan shape = the PIP join's (broadcast-index / salted sort-merge,
+    Plan shape = the PIP join's (broadcast index or pid-keyed shuffle,
     chosen by the same auto logic) followed by ONE hash aggregation on
     the polygon key with map-side partial aggs — the join output never
     materializes anywhere, Catalyst pipelines refine straight into the

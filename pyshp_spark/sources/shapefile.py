@@ -19,8 +19,8 @@ Architecture difference from the reference (by design, not a port): the
 reference is a lazy record-at-a-time reader; here each *file* is parsed
 in one shot into Arrow-friendly columns (WKB + bbox + typed attrs) by a
 task, and a directory of shapefiles becomes a DataFrame with per-file
-parallelism via ``mapInPandas`` (the natural partitioning unit for this
-format).  After ingest everything is columnar — bbox columns enable
+parallelism through the ``shapefile`` Spark Data Source (one input
+partition per file, the natural partitioning unit for this format).  After ingest everything is columnar — bbox columns enable
 Parquet min/max skipping where the reference re-parses bytes per query
 (sf.py:1683-1687).
 """
@@ -28,8 +28,6 @@ Parquet min/max skipping where the reference re-parses bytes per query
 from __future__ import annotations
 
 import datetime as _dt
-import glob
-import os
 import struct
 from typing import Iterable
 
@@ -579,56 +577,34 @@ def read_shapefile_urls(spark, urls: list[str], bbox=None, fields=None):
     return urls_df.mapInPandas(parse, schema=schema)
 
 
-def _pairs_in_dir(path: str) -> list[tuple[str, str | None]]:
-    shps = sorted(glob.glob(os.path.join(path, "*.shp")))
-    out = []
-    for s in shps:
-        d = s[:-4] + ".dbf"
-        out.append((s, d if os.path.exists(d) else None))
-    return out
-
-
 def read_shapefiles(spark, path: str, bbox=None, fields=None):
     """Directory (or single .shp path) -> Spark DataFrame.
 
-    One task per shapefile (the format's natural parallelism unit);
-    parsing runs as an Arrow-batched ``mapInPandas`` so geometry lands
-    directly in columnar form.  Schema is inferred from the first file
-    on the driver (headers only would suffice; cheap at these sizes).
+    A thin wrapper over the ``shapefile`` Spark Data Source
+    (``sources/datasource.ShapefileDataSource``, registered on first
+    use): one input partition per shapefile, Arrow-batch reads on the
+    executors, schema inferred once from the file headers.  ``bbox``
+    (x0, y0, x1, y1) and ``fields`` (dbf column names) become the
+    source's ``bbox`` / ``fields`` options.
     """
-    pairs = (
-        [(path, path[:-4] + ".dbf" if os.path.exists(path[:-4] + ".dbf") else None)]
-        if path.endswith(".shp")
-        else _pairs_in_dir(path)
-    )
-    if not pairs:
-        raise FileNotFoundError(f"no .shp files under {path}")
+    from py4j.protocol import Py4JError  # noqa: PLC0415
 
-    with open(pairs[0][0], "rb") as f:
-        shp0 = f.read()
-    dbf0 = None
-    if pairs[0][1]:
-        with open(pairs[0][1], "rb") as f:
-            dbf0 = f.read()
-    sample = shapefile_to_pandas(shp0, dbf0, bbox=bbox, fields=fields)
-    sample.insert(0, "src", pairs[0][0])
-    schema = spark.createDataFrame(sample.head(10)).schema
+    from pyshp_spark.sources.datasource import ShapefileDataSource  # noqa: PLC0415
 
-    paths_df = spark.createDataFrame(
-        [(s, d) for s, d in pairs], "shp_path string, dbf_path string"
-    ).repartition(len(pairs))
-
-    def parse(iterator: Iterable[pd.DataFrame]):
-        for pdf in iterator:
-            for shp_path, dbf_path in pdf.itertuples(index=False):
-                with open(shp_path, "rb") as f:
-                    shp = f.read()
-                dbf = None
-                if dbf_path:
-                    with open(dbf_path, "rb") as f:
-                        dbf = f.read()
-                out = shapefile_to_pandas(shp, dbf, bbox=bbox, fields=fields)
-                out.insert(0, "src", shp_path)
-                yield out
-
-    return paths_df.mapInPandas(parse, schema=schema)
+    try:
+        registered = (
+            spark._jsparkSession.sessionState()
+            .dataSourceManager()
+            .dataSourceExists(ShapefileDataSource.name())
+        )
+    except (AttributeError, Py4JError):
+        # no JVM-side registry to ask: registering again is harmless
+        registered = False
+    if not registered:
+        spark.dataSource.register(ShapefileDataSource)
+    reader = spark.read.format(ShapefileDataSource.name())
+    if bbox is not None:
+        reader = reader.option("bbox", ",".join(repr(float(v)) for v in bbox))
+    if fields is not None:
+        reader = reader.option("fields", ",".join(fields))
+    return reader.load(path)

@@ -8,6 +8,9 @@
    output columns without changing row content on both paths.
 3. knn_join's running top-k fold releases every per-round cache except
    the one backing the returned frame.
+4. The PIP family has two paths (broadcast index, pid-keyed shuffle):
+   salt_k never salts the index path, the shuffle salt skips unhashable
+   point columns, and duplicate-heavy probes are exact on every path.
 """
 
 from __future__ import annotations
@@ -135,32 +138,83 @@ def test_semi_anti_point_out_cols_trim(spark):
         )
 
 
-def test_dedup_coords_identical_results(spark):
-    """dedup_coords collapses duplicate probe coordinates before the
-    candidate join and re-attaches rows by coordinate equi-join — the
-    output (including per-duplicate-row multiplicity) must be
-    bit-identical on both shuffle paths (plain and salted)."""
+# duplicate-heavy probe: many rows piled on one hot coordinate, plus
+# full-duplicate rows and a NaN/NULL-coordinate row
+_DUP_ROWS = (
+    [(i, 10.0, 10.0) for i in range(50)]
+    + [(100, 30.0, 30.0), (100, 30.0, 30.0), (101, 90.0, 90.0),
+       (102, float("nan"), 5.0), (103, None, 5.0)]
+)
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [
+        dict(broadcast_polygons="auto"),
+        dict(broadcast_polygons=False),
+        dict(broadcast_polygons=False, salt_k=4),
+        dict(broadcast_polygons="auto", salt_k=4),
+    ],
+    ids=["auto", "shuffle", "shuffle-salt4", "auto-salt4"],
+)
+def test_duplicate_heavy_probe_exact_on_every_path(spark, kw):
+    """Every PIP path returns the same rows, with per-row multiplicity
+    kept: each of the 50 hot-coordinate rows and both full-duplicate
+    rows appear once per containing polygon; NaN/NULL coordinates and
+    the outside point match nothing."""
     sp.clear_polygon_index_cache()
-    polys = _polys(spark)
-    # duplicate-heavy probe: many rows piled on one hot coordinate,
-    # plus full-duplicate rows and a NaN/NULL-coordinate row
-    rows = [(i, 10.0, 10.0) for i in range(50)]
-    rows += [(100, 30.0, 30.0), (100, 30.0, 30.0), (101, 90.0, 90.0),
-             (102, float("nan"), 5.0), (103, None, 5.0)]
-    pts = spark.createDataFrame(rows, "pid long, x double, y double")
-    for salt in (None, 4):
-        base = point_in_polygon_join(
-            pts, polys, grid=GRID4, polygon_cols=["oid"],
-            broadcast_polygons=False, salt_k=salt,
-        )
-        dd = point_in_polygon_join(
-            pts, polys, grid=GRID4, polygon_cols=["oid"],
-            broadcast_polygons=False, salt_k=salt, dedup_coords=True,
-        )
-        assert dd.columns == base.columns
-        assert sorted(map(tuple, base.collect())) == sorted(
-            map(tuple, dd.collect())
-        )
+    pts = spark.createDataFrame(_DUP_ROWS, "pid long, x double, y double")
+    out = point_in_polygon_join(
+        pts, _polys(spark), grid=GRID4, polygon_cols=["oid"], **kw
+    )
+    assert out.columns == ["pid", "x", "y", "oid"]
+    want = [(i, 10.0, 10.0, 0) for i in range(50)] + [(100, 30.0, 30.0, 1)] * 2
+    assert sorted(map(tuple, out.collect())) == sorted(want)
+
+
+@pytest.mark.parametrize("bc", ["auto", False])
+def test_salt_k_with_map_point_column(spark, bc):
+    """A point column Spark cannot hash (MapType) must not break a
+    salted join: "auto" runs the index (no salt at all) and the forced
+    shuffle path leaves the map out of the salt hash."""
+    sp.clear_polygon_index_cache()
+    pts = spark.createDataFrame(
+        [(1, 10.0, 10.0, {"a": 1}), (2, 30.0, 30.0, None),
+         (3, 90.0, 90.0, {"b": 2}), (4, 10.0, 10.0, {"a": 1}),
+         (5, 50.0, 10.0, {})],
+        "pid long, x double, y double, tags map<string,int>",
+    )
+    out = point_in_polygon_join(
+        pts, _polys(spark), grid=GRID4, polygon_cols=["oid"],
+        broadcast_polygons=bc, salt_k=4,
+    )
+    got = sorted((r.pid, r.oid) for r in out.collect())
+    assert got == [(1, 0), (2, 1), (4, 0), (5, 2)]
+
+
+def test_salt_k_with_broadcastable_polygons_runs_the_index(spark):
+    """salt_k only salts the shuffle path: with a broadcastable polygon
+    set all three entry points probe the broadcast index — no salt
+    column and no shuffle exchange anywhere on the point side."""
+    sp.clear_polygon_index_cache()
+    polys, pts = _polys(spark), _pts(spark)
+    inner = point_in_polygon_join(
+        pts, polys, grid=GRID4, polygon_cols=["oid"], salt_k=4
+    )
+    plan = inner._jdf.queryExecution().executedPlan().toString()
+    assert "__ps_matches" in plan
+    assert "__ps_salt" not in plan
+    shuffles = [
+        ln for ln in plan.splitlines()
+        if "Exchange" in ln and "BroadcastExchange" not in ln
+    ]
+    assert shuffles == [], plan
+    for join in (spatial_semi_join, spatial_anti_join):
+        out = join(pts, polys, grid=GRID4, salt_k=4)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "__ps_salt" not in plan and "Exchange" not in plan, plan
+    # one geometry index answers all three
+    assert len(sp._INDEX_CACHE) == 1
 
 
 def test_vectorized_cover_matches_per_row(spark):

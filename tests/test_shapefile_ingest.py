@@ -120,3 +120,40 @@ class TestSparkIngest:
         (d / "poly2.shp").write_bytes(shp)
         (d / "poly2.dbf").write_bytes(dbf)
         assert read_shapefiles(spark, str(d)).count() == 2 * N
+
+    def test_read_shapefiles_2d_polygons_arrow_off(self, spark, tmp_path):
+        """A 2D polygon file (all-None z/m) reads with the Arrow
+        conversion disabled: z/m come back typed array<double> and the
+        columns are exactly the shapefile Data Source's."""
+        from pyshp_spark.sources.datasource import ShapefileDataSource
+        from pyshp_spark.sources.shapefile import read_shapefiles
+        from pyshp_spark.sources.shp_writer import POLYGON, write_dbf, write_shp
+
+        ring = [(0.0, 0.0), (0.0, 1.0), (1.0, 1.0), (1.0, 0.0), (0.0, 0.0)]
+        shp, shx = write_shp(
+            [(POLYGON, [ring]), (POLYGON, [[(x + 2, y) for x, y in ring]])]
+        )
+        dbf = write_dbf([("NAME", "C", 8, 0)], [["a"], ["b"]])
+        for ext, buf in [("shp", shp), ("shx", shx), ("dbf", dbf)]:
+            (tmp_path / f"flat.{ext}").write_bytes(buf)
+        key = "spark.sql.execution.arrow.pyspark.enabled"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "false")
+        try:
+            df = read_shapefiles(spark, str(tmp_path))
+            rows = df.collect()
+            spark.dataSource.register(ShapefileDataSource)
+            ds_cols = spark.read.format("shapefile").load(str(tmp_path)).columns
+        finally:
+            spark.conf.set(key, prev)
+        types = dict(df.dtypes)
+        assert types["z"] == "array<double>"
+        assert types["m"] == "array<double>"
+        assert df.columns == ds_cols
+        assert sorted(r.NAME for r in rows) == ["a", "b"]
+        assert [r.xmin for r in sorted(rows, key=lambda r: r.NAME)] == [0.0, 2.0]
+        # bbox / fields reach the source as its options
+        boxed = read_shapefiles(
+            spark, str(tmp_path), bbox=(1.5, -1.0, 5.0, 5.0), fields=["NAME"]
+        )
+        assert [r.NAME for r in boxed.collect()] == ["b"]

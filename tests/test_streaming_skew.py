@@ -14,7 +14,7 @@ from pyspark.sql.types import (
 
 from pyshp_spark.fixtures.images import images_fixture
 from pyshp_spark.fixtures.polygons import fixture_shapefile_bytes
-from pyshp_spark.operators.skew import cell_histogram, plan_salt_k, skew_stats
+from pyshp_spark.operators.skew import cell_histogram, skew_stats
 from pyshp_spark.operators.spatial import point_in_polygon_join
 from pyshp_spark.sources.shapefile import parse_shp_bytes
 from pyshp_spark.streaming.pip_stream import (
@@ -125,9 +125,6 @@ class TestSkewPlanner:
         assert total == 400
         s = skew_stats(df, x="lon", y="lat")
         assert s["max_rows"] >= s["mean_rows"]
-        # images fixture has a 20% hot cluster -> planner salts
-        k = plan_salt_k(df, x="lon", y="lat", target_ratio=2.0)
-        assert k is None or (2 <= k <= 16)
 
 
 class TestStreamingDedup:
